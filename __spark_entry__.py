@@ -97,7 +97,7 @@ def _d_words_cte(tbl: str = "documents") -> str:
 
 def _q_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_read(spark, sf_dir, "documents"))
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     return docs_table(analysis).select(
         "url", "paginas", "pagina_tipo", "qtd_letras", "qtd_palavras",
         F.length("extracted_text").alias("text_len"),
@@ -131,7 +131,7 @@ ORDER BY status
 
 def _q_extract_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = pages_from_documents(_read(spark, sf_dir, "documents"))
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     return (
         lineage_table(analysis)
         .groupBy("status")
@@ -165,7 +165,7 @@ def _q_extract_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     subset = docs.where(F.pmod(F.col("doc_id"), F.lit(11)).isin(5, 7))
     pages = pages_from_documents(subset)
-    analysis = run_extraction(pages, balance=True)
+    analysis = run_extraction(pages)
     extracted = docs_table(analysis).select(
         F.col("url").alias("doc_id"),
         F.col("extracted_text").alias("text"),

@@ -98,7 +98,9 @@ def nb_count_rows(
             ).cast("long"),
         )
     )
-    return df.select(
+    # a NULL label has no class to count toward, and a NULL group key
+    # would kill the streaming twin's state function
+    return df.where(F.col(label_col).isNotNull()).select(
         F.col(label_col).cast("long").alias("y"),
         F.explode(
             F.concat(dimarr, F.array(F.lit(CLS_DIM).cast("long")))
@@ -388,7 +390,9 @@ def dsir_count_rows(
             h48(F.concat(F.lit(DSIR_SEED), g)), F.lit(int(dims))
         ).cast("long"),
     )
-    return df.select(
+    # NULL-flagged docs are neither target nor raw-only: drop them, as a
+    # NULL group key would kill the streaming twin's state function
+    return df.where(F.col(target_col).isNotNull()).select(
         F.col(target_col).cast("long").alias("t"),
         F.explode(dimarr).alias("dim"),
     ).select("dim", "t")

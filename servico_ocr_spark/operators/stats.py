@@ -465,7 +465,8 @@ def cms_sketch(
     sequence) → ONE map-side-combinable sum agg; partials collapse to
     ≤ ``depth·width`` rows per partition before the shuffle, and the
     output is ``depth·width`` rows regardless of input size. Empty
-    cells emit no row (readers treat absent as 0)."""
+    cells emit no row (readers treat absent as 0); NULL values are not
+    counted."""
     return cms_cells(df, value_col, depth, width, weight_col).groupBy(
         "d", "col"
     ).agg(F.sum("_w").cast("long").alias("cms"))
@@ -494,7 +495,9 @@ def cms_cells(
         if weight_col is not None
         else F.lit(1).cast("long")
     )
-    rows = df.select(
+    # a NULL value hashes to no cell (and a NULL cell key would kill the
+    # streaming twin's state function), so it is not counted
+    rows = df.where(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("string").alias("_v"), w.alias("_w")
     ).select(
         F.explode(

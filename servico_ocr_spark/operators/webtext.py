@@ -13,7 +13,7 @@ At 100 TB the operator is embarrassingly parallel (no shuffle at all —
 bounded by input split sizing (`spark.sql.files.maxPartitionBytes`) and
 kernel throughput, not the planner. Skewed page sizes are mild compared
 with the OCR path's multipage PDFs (HTML bytes per doc vary ~10², not
-10⁴); reuse `pipeline.run_extraction`'s salted repartition if a corpus
+10⁴); reuse `pipeline.weighted_repartition` if a corpus
 proves otherwise.
 """
 

@@ -10,10 +10,12 @@ Spark-first design notes (this is where the 100 TB story lives):
   parallelism.
 * **Skew.** Catalyst can't see document weight inside the UDF, so weight is
   handled in data space: a cheap page-count estimate is parsed from the
-  payload header JVM-side, and :func:`weighted_repartition` spreads heavy
-  documents round-robin across partitions (the north_star's "salted
-  repartition by estimated page count"). The ranking window is partitioned
-  by a url-hash group so no single-task global sort exists at scale.
+  payload header JVM-side, and :func:`weighted_repartition` computes each
+  row's target partition — heavy documents dealt round-robin by weight
+  rank, light ones by url hash — and routes it there with
+  ``repartitionById``. The ranking window is partitioned by a url-hash
+  group so no single-task global sort exists at scale. That window and
+  the routing are the extraction's only two shuffles.
 * **Resume / idempotence.** The reference's folder-queue lifecycle
   (entrada → processando → saida|erro, app/util_processar_pasta.py:48-63)
   becomes: anti-join the input against already-written lineage urls, then
@@ -27,7 +29,6 @@ Spark-first design notes (this is where the 100 TB story lives):
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -45,6 +46,8 @@ from .schemas import ANALYSIS_SCHEMA, DOCS_COLUMNS, LINEAGE_COLUMNS
 
 JOB_TS = "2026-01-01 00:00:00"  # deterministic dthr (reference X8 format)
 HEAVY_PAGE_THRESHOLD = 8
+WEIGHT_COL = "est_pages"  # balance weight, set by with_page_estimate
+RANK_GROUPS = 64  # url-hash groups of the heavy-rank window
 
 
 def analyze_page_row(url: str, html: bytes, renders: bool = True):
@@ -52,13 +55,9 @@ def analyze_page_row(url: str, html: bytes, renders: bool = True):
     pytest oracle. Returns a dict matching ANALYSIS_SCHEMA (minus
     partition_id / est_pages).
 
-    ``renders=False`` skips the md/html render strings (columns stay in
-    the schema as NULL). The renders roughly double per-document output
-    bytes (each embeds the full text again), and on a bandwidth-bound
-    box that Arrow mass is what caps high-core-count throughput — a
-    training-data pipeline that only needs text/spans/stats should not
-    pay for presentation artifacts it never writes. Analysis semantics
-    (boxes, text, spans, stats) are byte-identical either way
+    ``renders=False`` returns md/html_render as None, for callers that
+    only read the text (a correctness oracle comparing extracted_text).
+    Every other field is byte-identical either way
     (test_renders_flag_only_affects_render_columns)."""
     payload = parse_payload(html)
     tokens = document_tokens(url, payload.get("text") or "", payload["archetype"])
@@ -112,7 +111,7 @@ def _error_row(url: str, exc: Exception) -> dict:
 
 
 def _process_batches(
-    batches: Iterable[pd.DataFrame], renders: bool = True
+    batches: Iterable[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel. Row = document; Arrow batches in, one result row
     per document out. The loop is per-*document* (the correct vectorization
@@ -126,10 +125,10 @@ def _process_batches(
         out = []
         urls = batch["url"].tolist()
         htmls = batch["html"].tolist()
-        ests = batch["est_pages"].tolist() if "est_pages" in batch else [None] * len(urls)
+        ests = batch["est_pages"].tolist()
         for url, html, est in zip(urls, htmls, ests):
             try:
-                row = analyze_page_row(url, html, renders=renders)
+                row = analyze_page_row(url, html)
             except Exception as exc:  # error side-output, never fail the job
                 row = _error_row(url, exc)
             row["partition_id"] = pid
@@ -156,117 +155,71 @@ def with_page_estimate(pages: DataFrame) -> DataFrame:
     )
 
 
-_PARTITION_SALTS: dict[int, list[int]] = {}
-
-
-def _partition_salts(spark: SparkSession, num_partitions: int) -> list[int]:
-    """For each target partition t, a long ``s_t`` with
-    ``pmod(murmur3(s_t), P) == t`` — so ``repartition(P, col)`` on a
-    column holding ``s_t`` routes the row to exactly partition t.
-    DataFrame repartition only ever hash-partitions; this inverts the
-    hash once per P (one tiny job over 64·P candidate longs, memoized)
-    to get deterministic explicit placement without dropping to RDDs."""
-    if num_partitions not in _PARTITION_SALTS:
-        cand = spark.range(0, num_partitions * 64).select(
-            "id", F.pmod(F.hash("id"), F.lit(num_partitions)).alias("t")
-        )
-        salts: dict[int, int] = {}
-        for row in cand.collect():
-            salts.setdefault(row["t"], row["id"])
-        assert len(salts) == num_partitions
-        _PARTITION_SALTS[num_partitions] = [
-            salts[t] for t in range(num_partitions)
-        ]
-    return _PARTITION_SALTS[num_partitions]
-
-
 def weighted_repartition(
-    df: DataFrame,
-    weight_col: str = "est_pages",
-    num_partitions: int | None = None,
-    rank_groups: int = 64,
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Skew-aware repartition: heavy rows are dealt round-robin within
     their url-hash group; light rows spread by full-entropy url hash (at
     10^12-doc scale they are uniform by the law of large numbers).
 
-    Heavy rows are rank-ordered by weight inside ``rank_groups`` url-hash
-    groups (a distributed window — never a global sort), and row with
-    rank r of group g goes to partition ``pmod(hash(g) + r − 1, P)`` via
-    the murmur-salt table: each group's weight-sorted rank run deals
-    round-robin from a group-specific start, so a burst of 500-page PDFs
-    spreads across all partitions (measured max/mean partition weight
-    ~1.1 in the dense regime, vs ~1.8 for hashing the coarse (rank,
-    group) key — balls-into-bins). When heavy docs number only ~P the
-    per-group starts are independent and the residual imbalance is
-    binomial — the coordination-free floor; an exact cross-group
-    enumeration needs a second full input scan (est_pages derives from
-    the payload header, so nothing prunable) and was rejected as worse
-    at scale. NOTE: first use per ``num_partitions`` runs a tiny
-    memoized salt-table job at plan-construction time.
+    Heavy rows are rank-ordered by weight inside ``RANK_GROUPS`` url-hash
+    groups (a distributed window — never a global sort), and the row with
+    rank r of group g goes to partition ``pmod(hash(g) + r − 1, P)``,
+    routed there by ``repartitionById``: each group's weight-sorted rank
+    run deals round-robin from a group-specific start, so a burst of
+    500-page PDFs spreads across all partitions (measured max/mean
+    partition weight ~1.1 in the dense regime, vs ~1.8 for hashing the
+    coarse (rank, group) key — balls-into-bins: some partitions get 3
+    heavy docs, some 0, and the stragglers own the wall clock). When
+    heavy docs number only ~P the per-group starts are independent and
+    the residual imbalance is binomial — the coordination-free floor; an
+    exact cross-group enumeration needs a second full input scan
+    (est_pages derives from the payload header, so nothing prunable) or a
+    global sort, and was rejected as worse at scale.
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    salts = _partition_salts(df.sparkSession, num_partitions)
-    salt_arr = F.array(*[F.lit(s) for s in salts])
-
-    heavy = F.col(weight_col) >= F.lit(HEAVY_PAGE_THRESHOLD)
-    group = F.pmod(F.xxhash64("url"), F.lit(rank_groups))
-    win = Window.partitionBy(group).orderBy(F.desc(weight_col), "url")
+    parts = F.lit(num_partitions)
+    heavy = F.col(WEIGHT_COL) >= F.lit(HEAVY_PAGE_THRESHOLD)
+    group = F.pmod(F.xxhash64("url"), F.lit(RANK_GROUPS))
+    win = Window.partitionBy(group).orderBy(F.desc(WEIGHT_COL), "url")
     # heavy rows sort before light within each group (weight desc), so
     # row_number restricted to heavy rows IS their in-group weight rank
     rank = F.row_number().over(win)
-    # target partition: consecutive ranks of a group deal round-robin
-    # from a group-specific random start — a group's weight-sorted run
-    # spreads perfectly; cross-group starts are independent rotations.
-    # (A dense cross-group enumeration would need either a second pass
-    # over the input or a global sort — both worse at scale than the
-    # residual binomial imbalance this leaves when heavy docs are fewer
-    # than ~10× partitions.)
     # long arithmetic: hash() and row_number() are 32-bit, and ANSI mode
     # turns the int overflow (hash near Int.MaxValue + tens of millions
-    # of heavy rows in one group) into a job-killing exception
-    target = F.pmod(
-        F.hash(group.cast("long")).cast("long") + rank.cast("long") - 1,
-        F.lit(num_partitions),
+    # of heavy rows in one group) into a job-killing exception; the pmod
+    # result is < P, so the final int cast cannot overflow
+    target = F.when(
+        heavy,
+        F.pmod(
+            F.hash(group.cast("long")).cast("long") + rank.cast("long") - 1,
+            parts,
+        ),
+    ).otherwise(F.pmod(F.xxhash64("url"), parts))
+    # repartitionById rejects a window expression as its id column, so
+    # the target is materialised first
+    return (
+        df.withColumn("_pid", target.cast("int"))
+        .repartitionById(num_partitions, "_pid")
+        .drop("_pid")
     )
-    # element_at(salt_arr, t+1) routes EXACTLY to partition t: salts[t]
-    # murmur-hashes onto t under repartition's HashPartitioning. Hashing
-    # the (rank, group) pair directly is balls-into-bins over a small key
-    # set — some partitions get 3 heavy docs, some 0, and the stragglers
-    # own the wall clock.
-    salted = df.withColumn(
-        "_pk",
-        F.when(
-            heavy, F.element_at(salt_arr, (target + 1).cast("int"))
-        ).otherwise(F.xxhash64("url")),
-    )
-    return salted.repartition(num_partitions, "_pk").drop("_pk")
 
 
 def run_extraction(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    balance: bool = True,
-    renders: bool = True,
+    pages: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """pages → analysis DataFrame (one row per document, ANALYSIS_SCHEMA).
 
-    Lazy apart from the one-time salt-table probe in
-    :func:`weighted_repartition` (tiny, memoized per partition count);
-    callers split the result into docs/boxes/lineage with the selectors
-    below or write it once with :func:`write_analysis`.
-
-    ``renders=False`` leaves the md/html_render columns NULL (same
-    schema): skips the per-doc render compute AND roughly halves the
-    Arrow/output bytes per document — the lever for text-only consumers
-    (see :func:`analyze_page_row`).
+    Lazy: building it starts no Spark job. Callers split the result into
+    docs/boxes/lineage with the selectors below or write it once with
+    :func:`write_analysis`.
     """
-    staged = with_page_estimate(pages.select("url", "html"))
-    if balance:
-        staged = weighted_repartition(staged, num_partitions=num_partitions)
-    kernel = partial(_process_batches, renders=renders)
-    return staged.mapInPandas(kernel, schema=ANALYSIS_SCHEMA)
+    staged = weighted_repartition(
+        with_page_estimate(pages.select("url", "html")),
+        num_partitions=num_partitions,
+    )
+    return staged.mapInPandas(_process_batches, schema=ANALYSIS_SCHEMA)
 
 
 def docs_table(analysis: DataFrame) -> DataFrame:

@@ -27,16 +27,25 @@ def test_extraction_scan_prunes_columns(spark):
     assert "n_chars" not in scan and "lang" not in scan
 
 
-def test_extraction_has_single_shuffle_only_for_balance(spark):
+def test_extraction_shuffles_only_for_balance_and_builds_lazily(spark):
     pages = pages_from_documents(
         spark.read.parquet(f"{SF}/documents.parquet")
     )
-    unbalanced = _plan(run_extraction(pages, balance=False))
-    assert "Exchange" not in unbalanced  # zero-shuffle hot path
-    balanced = _plan(run_extraction(pages, balance=True))
-    # exactly two exchanges: the heavy-rank window and the balance
-    # repartition itself — nothing else may shuffle
-    assert balanced.count("Exchange hashpartitioning") == 2
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    # a partition count no other test builds with: nothing cached from an
+    # earlier call can hide a job started while the plan is constructed
+    analysis = run_extraction(pages, num_partitions=11)
+    assert set(tracker.getJobIdsForGroup()) == before
+    plan = _plan(analysis)
+    # exactly two exchanges: the heavy-rank window and the repartitionById
+    # routing — nothing else may shuffle
+    assert plan.count("Exchange ") == 2
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("Exchange shufflepartitionidpassthrough") == 1
+    routing = next(line for line in plan.splitlines()
+                   if "shufflepartitionidpassthrough" in line)
+    assert "REPARTITION_BY_NUM" in routing
 
 
 def test_filter_pushdown_pricing(spark):

@@ -743,3 +743,73 @@ def test_dsir_count_stream_final_cells_reproduce_batch_model(
         map(tuple, dimw_b.collect())
     )
     assert tot_s.collect() == tot_b.collect()
+
+
+def test_count_streams_skip_null_keys(spark, tmp_path):
+    """A NULL value, label or target flag must not reach the
+    sketch/model-as-state functions as a group key (``int(None)`` there
+    kills the whole streaming query): each twin drops those rows and
+    its cells equal the batch counts over the non-NULL rows."""
+    from pyspark.sql import functions as F
+
+    from servico_ocr_spark.operators import cms_sketch
+    from servico_ocr_spark.operators.classify import (
+        dsir_count_rows,
+        nb_count_rows,
+    )
+    from servico_ocr_spark.streaming.stateful import (
+        cms_stream,
+        dsir_count_stream,
+        nb_count_stream,
+    )
+
+    input_dir = str(tmp_path / "in")
+    schema = "v string, text string, y long, t long"
+    rows = [
+        ("w1", "good stuff shared words", 1, 1),
+        (None, "plain filler shared", 0, None),
+        ("w2", "good thing again", None, 0),
+        ("w1", "plain other filler words", 0, 1),
+    ]
+    docs = spark.createDataFrame(rows, schema)
+    docs.write.parquet(input_dir)
+
+    def final_cells(name, build, key):
+        out_dir = str(tmp_path / name)
+        stream = spark.readStream.schema(schema).parquet(input_dir)
+        (
+            build(stream).writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        cells = {}
+        for r in spark.read.parquet(out_dir).collect():
+            k = tuple(r[c] for c in key)
+            cells[k] = max(cells.get(k, 0), r[-1])
+        return cells
+
+    def batch_counts(df, key):
+        return {tuple(r[c] for c in key): r["count"]
+                for r in df.groupBy(*key).count().collect()}
+
+    cms = final_cells(
+        "cms", lambda s: cms_stream(s, "v", depth=2, width=8), ("d", "col"))
+    assert cms == {
+        (r["d"], r["col"]): r["cms"]
+        for r in cms_sketch(docs.where(F.col("v").isNotNull()), "v",
+                            depth=2, width=8).collect()
+    }
+    nb = final_cells(
+        "nb", lambda s: nb_count_stream(s, dims=16), ("dim", "y"))
+    assert nb == batch_counts(
+        nb_count_rows(docs.where(F.col("y").isNotNull()), dims=16),
+        ("dim", "y"))
+    dsir = final_cells(
+        "dsir", lambda s: dsir_count_stream(s, dims=16), ("dim", "t"))
+    assert dsir == batch_counts(
+        dsir_count_rows(docs.where(F.col("t").isNotNull()), dims=16),
+        ("dim", "t"))
+    assert {1, 0} == {k[1] for k in nb} == {k[1] for k in dsir}
